@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   * kilobyte-sized cached data (opt guide §2.2 — fewer, larger
   * partitions; measured round 19: the component/rank loops ran 32
   * tasks of ~200 ms fixed overhead per round at sf0.1, and the flag
-  * alone cut g10_pagerank 4.2→2.8 s and g27_components_star
-  * 9.8→7.5 s). At cluster scale the same flag sizes cached-consumer
+  * alone cut g10_pagerank 4.2→2.8 s and the star-contraction
+  * components walk 9.8→7.5 s). At cluster scale the same flag sizes cached-consumer
   * stages by bytes rather than inheriting whatever width the cache was
   * written with.
   *
@@ -26,8 +26,7 @@ import org.apache.spark.sql.SparkSession
   * displayed digit (observed on g73/g98 at sf0.001 — 4201.32 vs the
   * oracle's 4201.31 — when the flag was global). It is therefore
   * scoped to operators whose arithmetic is exact under any grouping:
-  * min-label propagation and star contraction (string/long mins and
-  * counts), shingle/minhash dedup (md5, integer counts, one final
+  * star-contraction components (string/long mins and counts), shingle/minhash dedup (md5, integer counts, one final
   * division of exact longs), BFS/Bellman-Ford (min), Lloyd rounds over
   * the q7 integer lattice (integer sums), exact rank selection
   * (integer cumulative counts).
@@ -50,7 +49,7 @@ object Tuning {
     * the same SparkSession during the scope would run with cached-plan
     * re-partitioning enabled, which is exactly the order-sensitive
     * double-rounding hazard the class doc warns about. Every entry
-    * point in this repo (Bench, Verify, ProbeTmp, the test suites)
+    * point in this repo (Bench, Verify, the test suites)
     * plans queries from a single driver thread, so the scope cannot
     * leak; a multi-threaded host must wrap its planning in
     * `spark.newSession()` clones (per-session confs) before using the

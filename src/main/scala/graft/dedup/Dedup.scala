@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
 import org.apache.spark.storage.StorageLevel
@@ -71,6 +72,18 @@ object Dedup {
     intermediates.foreach(_.unpersist(false))
     out
   }
+
+  /** Free a `localCheckpoint` frame's blocks. `Dataset.unpersist` only
+    * drops cache-manager entries; the checkpointed RDD sits behind the
+    * frame's LogicalRDD leaf and is released here. Spark logs a WARN
+    * that the lineage cannot be recomputed: callers release only
+    * frames nothing reads again.
+    */
+  private def releaseCheckpoint(ckpt: DataFrame): Unit =
+    ckpt.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Distinct-shingle postings (id, shingle) — semantically
     * `explode(wordShingles(...))`, but built WITHOUT higher-order
@@ -276,75 +289,16 @@ object Dedup {
     * the step that turns near-dup PAIRS into dedup GROUPS: every id
     * gets its component representative `rep` = min id reachable
     * through the pair graph, so "keep one per group" is
-    * `filter(id === rep)` and "drop dups" is the complement.
+    * `filter(id === rep)` and "drop dups" is the complement. Returns
+    * (id, rep) for every id in ≥ 1 pair (isolated ids absent);
+    * `require`s convergence within `maxIters` rounds.
     *
-    * Iterative min-label propagation (the standard distributed CC):
-    * each round takes, per id, the min label over {self} ∪ neighbors,
-    * until a fixpoint — O(component diameter) rounds; near-dup groups
-    * are near-cliques, so 2-3 rounds are typical. Each round is one
-    * shuffle keyed on id plus one fixpoint probe over the (compact,
-    * checkpointed) label frame; the edge set is symmetrized once and
-    * persisted. maxIters bounds pathological chains — a 100 TB corpus
-    * with a diameter-50 duplicate chain is data corruption, not dedup.
-    * Returns (id, rep) for ids appearing in ≥ 1 pair.
-    */
-  def components(pairs: DataFrame,
-      maxIters: Int = 20): DataFrame = graft.core.Tuning.withCachedPlanAqe(pairs.sparkSession) {
-    // pre-partitioned on the join key (r19): every round joins sym on
-    // dst, and a cached frame carries its partitioning into the join's
-    // distribution requirement — hash-clustering sym by dst ONCE saves
-    // the per-round re-exchange of the (static) edge frame (opt guide
-    // §2.4 "two operations keyed the same way can share one exchange")
-    val sym = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("rep"))
-      .localCheckpoint(true)
-    var iters = 0
-    var done = false
-    val sc0 = pairs.sparkSession.sparkContext
-    while (!done && iters < maxIters) {
-      sc0.setJobDescription(s"dedup: components round $iters")
-      val nbrMin = sym.join(labels, sym("dst") === labels("id"))
-        .select(sym("src").as("id"), col("rep"))
-      // the previous label rides the aggregation as a tagged row
-      // (each id contributes its own label exactly once), so the
-      // fixpoint probe IS the round's materializing action (r20): the
-      // LAZY localCheckpoint truncates the plan to a LogicalRDD leaf
-      // at build time (same lineage discipline as before — a persist
-      // here instead grows the logical tree EXPONENTIALLY, each round
-      // referencing the previous frame several times; measured: the
-      // driver hung stringifying the plan) but defers the final-stage
-      // work into the changed-row count below, which fills the
-      // checkpoint blocks and decides convergence in ONE job where
-      // the r19 shape paid an eager checkpoint job PLUS a probe job
-      // (the rounds are job-launch-bound at bench scale).
-      val next = labels.select(col("id"), col("rep"), lit(true).as("own"))
-        .unionAll(nbrMin.select(col("id"), col("rep"), lit(false).as("own")))
-        .groupBy("id")
-        .agg(min("rep").as("rep"), min(when(col("own"), col("rep"))).as("prev"))
-        .localCheckpoint(false)
-      done = next.filter(col("rep") =!= col("prev")).count() == 0L
-      labels = next.select("id", "rep")
-      iters += 1
-    }
-    sc0.setJobDescription(null)
-    sym.unpersist(false)
-    require(done, s"components did not converge in $maxIters iterations")
-    labels
-  }
-
-  /** Connected components by ALTERNATING large-star/small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14) — the HIGH-DIAMETER scale path beside
-    * [[components]]. Min-label propagation is O(diameter) rounds: the
-    * right default for near-clique dedup groups, a loud failure on a
-    * diameter-200 chain (line graphs, road networks, linked-list-ish
-    * event chains). Star contraction converges in O(log² n) rounds
-    * REGARDLESS of diameter by rewriting the edge set itself each
-    * round instead of flowing labels along fixed edges:
+    * ALTERNATING large-star/small-star contraction (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14):
+    * O(log² n) rounds REGARDLESS of diameter, because each round
+    * rewrites the edge set itself instead of flowing labels along
+    * fixed edges — a diameter-200 chain converges in 9 rounds where
+    * min-label propagation needs 200:
     *
     *  - large-star: every node links its LARGER neighbors to its
     *    minimum neighborhood member (min over neighbors and self) —
@@ -356,34 +310,33 @@ object Dedup {
     * Both halves preserve connectivity exactly (each rewritten edge
     * is witnessed by a 2-path through the center), so the fixpoint —
     * the edge set stable under both — is a star forest rooted at each
-    * component's minimum id, read out directly as (id, rep). Same
-    * contract as [[components]]: undirected (id_a, id_b) pairs in,
-    * (id, rep = component min) out for every id with ≥ 1 edge,
-    * isolated ids absent, loud `require` on non-convergence.
+    * component's minimum id, read out directly as (id, rep).
     *
-    * Cost shape per round: two groupBy-min + two joins, all shuffled
-    * on node id (the [[components]] round shape, twice), edge frame
-    * checkpointed per round. Rounds: ≤ 2·log²(n) in theory, single
-    * digits in practice even on chains (a 400-node path converges in
-    * ~6 alternations). Use when component diameter is unknown or
-    * unbounded; keep [[components]] for the near-clique dedup case
-    * where 2-3 min-label rounds beat 2 shuffles × log² rounds.
+    * Cost shape per round: two partition-min windows and one tagged
+    * aggregate, all shuffled on node id, edge frame checkpointed per
+    * round; only the current and the previous round's checkpoint
+    * blocks are ever held.
     */
-  def componentsStar(pairs: DataFrame,
+  def components(pairs: DataFrame,
       maxIters: Int = 25): DataFrame = graft.core.Tuning.withCachedPlanAqe(pairs.sparkSession) {
-    // canonical undirected edge: (u < v), self-loops dropped. All
-    // rewriting below emits (min, other) pairs, so canonical order is
-    // re-established by construction each round.
-    var e = pairs
+    // canonical undirected edge: (u < v). All rewriting below emits
+    // (min, other) pairs, so canonical order is re-established by
+    // construction each round. Self-loops (u = v) stay: both star
+    // halves skip them (large-star only re-hangs n > c, and the
+    // neighborhood min already counts the center), the round carries
+    // them over unchanged, and an id whose only pair is a self-loop
+    // still reads out as its own component.
+    var ckpt = pairs
       .select(least(col("id_a"), col("id_b")).as("u"),
         greatest(col("id_a"), col("id_b")).as("v"))
-      .where(col("u") =!= col("v")).distinct()
+      .distinct()
       .localCheckpoint(true)
+    var e = ckpt
     var iters = 0
     var done = e.isEmpty
     val sc0 = pairs.sparkSession.sparkContext
     while (!done && iters < maxIters) {
-      sc0.setJobDescription(s"dedup: components* round $iters")
+      sc0.setJobDescription(s"dedup: components round $iters")
       // large-star: center c over its FULL neighborhood. m_c =
       // min(neighbors ∪ self) ≤ c, and every neighbor n > c re-hangs
       // as (m_c, n) — already canonical since m_c ≤ c < n. Edges
@@ -433,7 +386,8 @@ object Dedup {
       // distinct e (s=0) on the edge — max(s)=1 ⇔ in the new set,
       // min(s)=0 ⇔ in the old one; the alternation is stable exactly
       // when every edge is in both. (One-sided containment alone
-      // would miss a strict shrink ss ⊂ e.) The probing count IS the
+      // would miss a strict shrink ss ⊂ e.) Self-loops are in e only
+      // and carried over as stable. The probing count IS the
       // round's materializing action (r20): the LAZY localCheckpoint
       // truncates the plan to a LogicalRDD leaf at build time (the
       // lineage discipline the r19 eager form had — a persist here
@@ -448,19 +402,26 @@ object Dedup {
         .groupBy("u", "v")
         .agg(max("s").as("in_ss"), min("s").as("in_e"))
         .localCheckpoint(false)
+      val loop = col("u") === col("v")
       done = tagged
-        .where(col("in_ss") =!= lit(1) || col("in_e") =!= lit(0))
+        .where((col("in_ss") =!= lit(1) && !loop) || col("in_e") =!= lit(0))
         .count() == 0L
-      e = tagged.where(col("in_ss") === lit(1)).select("u", "v")
+      // the count filled `tagged`'s blocks, so nothing reads the
+      // previous round's edge frame again: free it now, or a long
+      // walk holds one checkpoint per round until the cleaner's GC
+      releaseCheckpoint(ckpt)
+      ckpt = tagged
+      e = tagged.where(col("in_ss") === lit(1) || loop).select("u", "v")
       iters += 1
     }
     sc0.setJobDescription(null)
-    require(done, s"componentsStar did not converge in $maxIters iterations")
+    require(done, s"components did not converge in $maxIters iterations")
     // the stable edge set is a star forest rooted at component
-    // minima: non-roots appear exactly once as v, roots label
-    // themselves.
+    // minima plus self-loops: each id's rep is the least u it is
+    // paired with, itself included.
     e.select(col("v").as("id"), col("u").as("rep"))
-      .unionAll(e.select(col("u").as("id"), col("u").as("rep")).distinct())
+      .unionAll(e.select(col("u").as("id"), col("u").as("rep")))
+      .groupBy("id").agg(min("rep").as("rep"))
   }
 
   /** Train/test contamination pairs — the DECONTAMINATION stage of an

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Whole-graph analytics over DataFrame edge sets — the algorithms a
-  * graph store runs OUTSIDE pattern matching (connected components
-  * lives with dedup, `Dedup.components`). Everything is join+agg
+  * graph store runs OUTSIDE pattern matching (the connected-components
+  * walker lives with dedup, `Dedup.components`). Everything is join+agg
   * iteration: one shuffle per round keyed on the node id, edge set
   * persisted once — the Pregel-without-Pregel shape that scales with
   * executors.
@@ -146,31 +146,17 @@ object GraphAnalytics {
 
   /** Weakly-connected components over a (src, dst) edge frame:
     * (id, rep) for every edge ENDPOINT, rep = the component's
-    * minimum id — the graph-native face of the same min-label
-    * propagation engine the dedup pipeline uses for duplicate
-    * groups ([[graft.dedup.Dedup.components]]: per round, every
-    * node takes the min of its own and its neighbors' labels;
-    * fixpoint-checked, loud on non-convergence). Direction is
-    * ignored (weak connectivity); isolated nodes (no edges) are
-    * not represented — union them in as identity rows if the node
-    * table is wider than the edge universe. O(diameter) rounds of
-    * one edge-sized join + node-sized aggregate each — the same
-    * shuffle shape as [[pageRank]].
+    * minimum id — the graph-native face of the star-contraction
+    * walker the dedup pipeline uses for duplicate groups
+    * ([[graft.dedup.Dedup.components]]: O(log² n) rounds whatever
+    * the diameter, fixpoint-checked, loud on non-convergence).
+    * Direction is ignored (weak connectivity); isolated nodes (no
+    * edges) are not represented — union them in as identity rows if
+    * the node table is wider than the edge universe.
     */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 20): DataFrame =
+  def connectedComponents(edges: DataFrame): DataFrame =
     graft.dedup.Dedup.components(
-      edges.select(col("src").as("id_a"), col("dst").as("id_b")), maxIters)
-
-  /** [[connectedComponents]] by alternating large-star/small-star
-    * contraction ([[graft.dedup.Dedup.componentsStar]]) — identical
-    * contract and output, O(log² n) rounds instead of O(diameter).
-    * Use when component diameter is unknown or can exceed ~15 (long
-    * chains, road-network-ish graphs): min-label loud-fails there by
-    * design, star contraction converges in single-digit alternations.
-    */
-  def connectedComponentsStar(edges: DataFrame, maxIters: Int = 25): DataFrame =
-    graft.dedup.Dedup.componentsStar(
-      edges.select(col("src").as("id_a"), col("dst").as("id_b")), maxIters)
+      edges.select(col("src").as("id_a"), col("dst").as("id_b")))
 
   def triangleCounts(edges: DataFrame): DataFrame = graft.core.Tuning.withCachedPlanAqe(edges.sparkSession) {
     val und = canonicalUndirected(edges)

@@ -61,7 +61,7 @@ object DedupOps {
 
   /** The shared near-dup pipeline CTE chain — postings → df-capped
     * candidates → exact-Jaccard pairs → symmetrized edges → recursive
-    * reachability → min-label components. Consumes a shingle CTE
+    * reachability → min-reachable-id components. Consumes a shingle CTE
     * named `sh`; leaves `post` and `comp` defined. The single SQL
     * source for every oracle that clusters near-dups (d7, d11, d12) —
     * a threshold tweak edits ONE place.
@@ -281,8 +281,8 @@ object DedupOps {
     // D7 dup GROUPS: connected components over the d2 near-dup pairs
     // — pairs alone do not dedup a corpus; transitive closure does
     // (a~b, b~c ⇒ {a,b,c} is one group, keep min id). Spark side is
-    // iterative min-label propagation; the oracle computes the same
-    // fixpoint as min-reachable-id via a recursive CTE.
+    // star contraction (Dedup.components); the oracle computes the
+    // same fixpoint as min-reachable-id via a recursive CTE.
     QueryDef(
       "d7_dup_groups",
       (s, d) => orderedByAll(

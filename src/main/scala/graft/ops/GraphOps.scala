@@ -720,8 +720,8 @@ object GraphOps {
     ),
     // G23 weakly-connected components over the prefixed heterogeneous
     // edge set — the one standard graph-analytics primitive the
-    // inventory lacked as a PUBLIC graph API (the dedup pipeline has
-    // used the same min-label engine since d7). The oracle derives
+    // inventory lacked as a PUBLIC graph API (the dedup pipeline
+    // runs the same star-contraction walker, d7). The oracle derives
     // ground truth STRUCTURALLY (every node's region via its parent
     // chain, rep = min member id per region) — a non-iterative,
     // independent derivation, so a propagation bug cannot cancel out.
@@ -729,31 +729,6 @@ object GraphOps {
       "g23_components",
       (s, d) => orderedByAll(
         graft.graph.GraphAnalytics.connectedComponents(edgeSet(s, d))),
-      Some("""WITH m AS (
-             |  SELECT 'r_' || CAST(r_regionkey AS VARCHAR) AS id,
-             |         r_regionkey AS reg FROM region
-             |  UNION ALL
-             |  SELECT 'n_' || CAST(n_nationkey AS VARCHAR), n_regionkey FROM nation
-             |  UNION ALL
-             |  SELECT 'c_' || CAST(c_custkey AS VARCHAR), n_regionkey
-             |  FROM customer JOIN nation ON c_nationkey = n_nationkey
-             |  UNION ALL
-             |  SELECT 'o_' || CAST(o_orderkey AS VARCHAR), n_regionkey
-             |  FROM orders JOIN customer ON o_custkey = c_custkey
-             |  JOIN nation ON c_nationkey = n_nationkey),
-             |rep AS (SELECT reg, min(id) AS rep FROM m GROUP BY 1)
-             |SELECT m.id, rep.rep FROM m JOIN rep USING (reg)
-             |ORDER BY ALL""".stripMargin)
-    ),
-    // G27 the same components, computed by the ALTERNATING
-    // large-star/small-star contraction (the O(log² n)-round
-    // high-diameter scale path) against the SAME structural oracle —
-    // proving the second algorithm through the gate, not just a spec
-    // cross-check against the first.
-    QueryDef(
-      "g27_components_star",
-      (s, d) => orderedByAll(
-        graft.graph.GraphAnalytics.connectedComponentsStar(edgeSet(s, d))),
       Some("""WITH m AS (
              |  SELECT 'r_' || CAST(r_regionkey AS VARCHAR) AS id,
              |         r_regionkey AS reg FROM region

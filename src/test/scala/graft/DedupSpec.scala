@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.dedup.Dedup
 import graft.search.Vectors
@@ -47,49 +50,106 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("componentsStar matches components on mixed small graphs") {
-    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L), (10L, 12L), (12L, 11L),
-      (11L, 10L), (20L, 21L)).toDF("id_a", "id_b")
-    val star = Dedup.componentsStar(pairs).as[(Long, Long)].collect().toMap
-    val minLabel = Dedup.components(pairs).as[(Long, Long)].collect().toMap
-    assert(star === minLabel)
+  /** Driver-side union-find reference: (id, min id of its component)
+    * for every id in a pair. Linking the larger root under the smaller
+    * keeps every root its set's minimum.
+    */
+  private def unionFindReps(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- pairs) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
   }
 
-  test("componentsStar handles a diameter-200 chain where min-label loud-fails") {
-    // a 201-node path: diameter 200 >> the min-label default of 20
-    // rounds. Star contraction's round count is O(log² n), not
-    // O(diameter) — the default budget of 25 must be ample.
-    val chain = (1L to 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    intercept[IllegalArgumentException] {
-      Dedup.components(chain) // O(diameter) rounds: exceeds maxIters=20
-    }
-    val got = Dedup.componentsStar(chain).as[(Long, Long)].collect().toMap
+  private def componentMap(pairs: Seq[(Long, Long)]): Map[Long, Long] =
+    Dedup.components(pairs.toDF("id_a", "id_b")).as[(Long, Long)].collect().toMap
+
+  private val chain201 = (1L to 200L).map(i => (i, i + 1))
+
+  test("components matches a union-find reference on mixed small graphs") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L), (10L, 12L), (12L, 11L),
+      (11L, 10L), (20L, 21L))
+    assert(componentMap(pairs) === unionFindReps(pairs))
+  }
+
+  test("components converges on a diameter-200 chain within 12 rounds") {
+    // a 201-node path: star contraction's round count is O(log² n),
+    // not O(diameter) — 9 rounds here. An O(diameter) walker (min-label
+    // propagation needs 200 rounds) fails this pin loudly.
+    val got = Dedup.components(chain201.toDF("id_a", "id_b"), maxIters = 12)
+      .as[(Long, Long)].collect().toMap
     assert(got.size === 201 && got.values.toSet === Set(1L))
   }
 
-  test("componentsStar window form: duplicate star projections collapse (r20)") {
-    // r20 rewrote both star halves as partition-min WINDOWS with a
-    // single conditional projection. The shapes that distinguish the
-    // window form from the old groupBy+join: (a) distinct (c, n) rows
-    // projecting to the SAME (m, n) large-star edge (centers 2 and 3
-    // both hang 4 under 1), (b) the small-star center re-hang riding
-    // the min row itself — duplicates differ only in multiplicity and
-    // the tagged aggregate must collapse them.
+  test("components releases each round's checkpoint blocks") {
+    // the 201-node chain walks 9 rounds. getPersistentRDDs holds its
+    // RDDs weakly, so a GC could hide a leaked round; the listener pins
+    // every RDD persisted while the walk's jobs start, and what is still
+    // registered afterwards is exactly what the walker did not release
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val pinned = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val pin = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit =
+        sc.getPersistentRDDs.values.foreach(pinned.add)
+    }
+    sc.addSparkListener(pin)
+    try {
+      val comp = Dedup.components(chain201.toDF("id_a", "id_b"))
+      assert(comp.as[(Long, Long)].collect().length === 201)
+      val grown = (sc.getPersistentRDDs.keySet -- before).size
+      assert(grown <= 2, s"components left $grown persisted RDDs behind")
+    } finally sc.removeSparkListener(pin)
+  }
+
+  test("components window form: duplicate star projections collapse") {
+    // both star halves are partition-min WINDOWS with a single
+    // conditional projection. The shapes that distinguish the window
+    // form from a groupBy+join: (a) distinct (c, n) rows projecting to
+    // the SAME (m, n) large-star edge (centers 2 and 3 both hang 4
+    // under 1), (b) the small-star center re-hang riding the min row
+    // itself — duplicates differ only in multiplicity and the tagged
+    // aggregate must collapse them.
     val dense = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L),
-      (6L, 5L), (5L, 7L), (7L, 6L)).toDF("id_a", "id_b")
-    val star = Dedup.componentsStar(dense).as[(Long, Long)].collect().toMap
-    val minLabel = Dedup.components(dense).as[(Long, Long)].collect().toMap
-    assert(star === minLabel)
-    assert(star === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      (6L, 5L), (5L, 7L), (7L, 6L))
+    val got = componentMap(dense)
+    assert(got === unionFindReps(dense))
+    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       5L -> 5L, 6L -> 5L, 7L -> 5L))
   }
 
-  test("componentsStar: duplicate/reversed pairs, self-loops, empty input") {
-    val messy = Seq((2L, 1L), (1L, 2L), (2L, 2L), (3L, 2L)).toDF("id_a", "id_b")
-    val got = Dedup.componentsStar(messy).as[(Long, Long)].collect().toMap
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+  test("components: duplicate/reversed pairs, self-loops, empty input") {
+    val messy = Seq((2L, 1L), (1L, 2L), (2L, 2L), (3L, 2L), (9L, 9L))
+    assert(componentMap(messy) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 9L),
+      "an id whose only pair is a self-loop is its own component")
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(Dedup.componentsStar(empty).isEmpty)
+    assert(Dedup.components(empty).isEmpty)
+  }
+
+  test("components equals union-find on random edge lists") {
+    // scalacheck-generated graphs (fixed seeds): three paths over
+    // random distinct ids plus random extra edges, with self-loops,
+    // duplicates and reversed copies mixed in
+    val graph = for {
+      n <- Gen.choose(2, 60)
+      chains <- Gen.listOfN(3,
+        Gen.choose(2, n).flatMap(len => Gen.pick(len, 1L to n.toLong)))
+      extra <- Gen.listOf(Gen.zip(Gen.choose(1L, n.toLong), Gen.choose(1L, n.toLong)))
+      loops <- Gen.listOf(Gen.choose(1L, n.toLong + 5))
+    } yield {
+      val base = chains.flatMap(c => c.zip(c.tail)) ++ extra ++ loops.map(x => (x, x))
+      base ++ base.take(base.size / 3).map(_.swap) ++ base.take(base.size / 4)
+    }
+    val cases = (0 until 10).flatMap(i => graph.apply(Gen.Parameters.default, Seed(i.toLong)))
+    assert(cases.size === 10)
+    for (pairs <- cases)
+      assert(componentMap(pairs) === unionFindReps(pairs), s"pairs: $pairs")
   }
 
   test("keep-one-per-group composes from components") {
